@@ -197,7 +197,6 @@ def main(argv: list[str] | None = None) -> None:
     #   line 2:            {"queries": ..., "errors": ...}  full detail
     #   line 3 (LAST):     compact headline, pinned <= 1500 chars by
     #                      tests/test_contract.py::test_bench_emits_contract_json
-    # plus a sidecar copy of the detail at bench_evidence/BENCH_QUERIES_LAST.json.
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     ev = os.path.join(repo_dir, "bench_evidence", "CERTIFIED_RUNS.json")
     try:
@@ -212,12 +211,6 @@ def main(argv: list[str] | None = None) -> None:
     if errors:
         detail["errors"] = errors
     print(json.dumps(detail))
-    queries_path = "bench_evidence/BENCH_QUERIES_LAST.json"
-    try:
-        with open(os.path.join(repo_dir, queries_path), "w") as f:
-            json.dump({"sf": sf, "total": total, **detail}, f, indent=1)
-    except OSError:
-        queries_path = "(stdout line above)"
     out = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -225,7 +218,7 @@ def main(argv: list[str] | None = None) -> None:
         "sf": sf,
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "queries_path": queries_path,
+        "queries_path": "(stdout line above)",
     }
     print(json.dumps(out))
 

@@ -13,6 +13,8 @@ command set and semantics:
   `streaming/cli.py:64-77`).
 - ``dashboard``         — the analytics tiles (reference
   `dashboard/streamlit_app.py:53-87`) printed to stdout.
+- ``migrate-control``   — convert a lake control table from the earlier
+  Spark-written layout (``pipeline/control_migrate``).
 
 T10: repeatable ``-p key=value`` params parsed with the reference's
 partition-split validation (`etl/cli.py:21-28`).
@@ -47,7 +49,7 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--warehouse", default="./warehouse", help="warehouse root dir")
     ap.add_argument(
         "--atomic", action="store_true",
-        help="land lake tables through the crash-atomic manifest layout",
+        help="land the silver table through the crash-atomic manifest layout",
     )
     ap.add_argument(
         "--atomic-single-writer", action="store_true",
@@ -111,6 +113,11 @@ def _build_parser() -> argparse.ArgumentParser:
     c.add_argument("--jdbc-sink-table", default="observations")
 
     sub.add_parser("dashboard", help="print the analytics tiles")
+    sub.add_parser(
+        "migrate-control",
+        help="convert a lake control table from the earlier Spark-written "
+        "layout to one file per job (run while no job writes it)",
+    )
 
     o = sub.add_parser(
         "optimize", help="compact fragmented partitions (atomic-safe OPTIMIZE)"
@@ -507,6 +514,12 @@ def main(argv: Sequence[str] | None = None) -> int:
         for measure, mean in analytics.mean_tiles(spark, wh).items():
             print(f"Global mean {measure}: {mean}")
         print(f"Last status recorded: {analytics.last_job_status(spark, wh)}")
+        return 0
+
+    if args.command == "migrate-control":
+        from meteo_etl_spark.pipeline.control_migrate import migrate_control_table
+
+        print(f"migrated_rows={migrate_control_table(spark, wh)}")
         return 0
 
     return 2  # unreachable — argparse enforces the command set

@@ -23,6 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from meteo_etl_spark.errors import LoadError
 from meteo_etl_spark.operators.atomic import (
     AtomicParquetTable,
     is_atomic_table,
@@ -362,7 +363,8 @@ def compact_table(
         if partition_col
         else reread.count()
     )
-    assert n_after == n_before, f"compaction changed row count: {n_before} -> {n_after}"
+    if n_after != n_before:
+        raise LoadError(f"compaction changed row count: {n_before} -> {n_after}")
 
     files_after = sum(len(f) for f in _partition_files(path, partition_col).values())
     return CompactStats(

@@ -492,7 +492,8 @@ def insert_fetch_metadata(
             ("ts", None),
         ],
     )
-    assert n == 1, f"control insert affected {n} rows"
+    if n != 1:
+        raise LoadError(f"control insert affected {n} rows")
     return fetch_id
 
 
@@ -530,7 +531,8 @@ def update_fetch_metadata(
     )
     if n == 0:
         raise LoadError(f"no fetch_metadata row with id={fetch_id!r}")
-    assert n == 1, f"control update affected {n} rows"
+    if n != 1:
+        raise LoadError(f"control update affected {n} rows")
     return fetch_id
 
 

@@ -7,7 +7,8 @@ Medallion-on-parquet layout (SURVEY.md §7):
   ``(latitude, longitude, timestamp)``, physically partitioned by
   ``obs_date`` (date of the observation timestamp) so merges and
   time-range queries prune to the touched dates.
-- ``{root}/control/fetch_metadata`` — job lifecycle table (small).
+- ``{root}/control/fetch_metadata`` — job lifecycle table, one parquet
+  file per job (``pipeline/control``).
 """
 
 from __future__ import annotations
@@ -26,11 +27,13 @@ from meteo_etl_spark.schemas import DROPPED_AT_LOAD, OBSERVATION_KEY, OBSERVATIO
 
 @dataclass(frozen=True)
 class Warehouse:
-    """``atomic=True`` lands every table (silver + control) through the
-    crash-atomic manifest layout (operators/atomic) — the deployment
-    choice matching the reference's transactional Postgres store; the
-    default plain layout stays readable by any parquet tool. Existing
-    plain tables are converted on their next merge.
+    """``atomic=True`` lands the silver table through the crash-atomic
+    manifest layout (operators/atomic) — the deployment choice matching
+    the reference's transactional Postgres store; the default plain
+    layout stays readable by any parquet tool. Existing plain tables
+    are converted on their next merge. The lake control table needs no
+    manifest in either mode: every control write replaces one file by
+    an atomic rename (``pipeline/control``).
 
     ``control_jdbc_url`` keeps the fetch_metadata lifecycle in a
     DATABASE instead (the reference's own deployment, `etl/db.py:49-85`)
@@ -39,8 +42,7 @@ class Warehouse:
     for the silver store: ``read_observations`` reads the database
     table and the streaming consumer defaults its sink to it — set
     both for the complete keep-Postgres deployment (bronze payloads
-    and the event topic stay on the lake). ``atomic`` then governs
-    only the lake tables."""
+    and the event topic stay on the lake)."""
 
     root: str
     atomic: bool = False

@@ -27,6 +27,23 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "meteo-etl-spark"
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` sized from the host: half of
+    ``MemAvailable``, between 1g and 32g. In local mode the driver JVM
+    also runs the executors, so a heap larger than the machine lets it
+    grow until the host runs out. Hosts without ``/proc/meminfo`` get
+    the 32g cap."""
+    cap_mib = 32 * 1024
+    try:
+        with open(meminfo) as f:
+            avail_kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mib}m"
+    return f"{max(1024, min(cap_mib, avail_kib // 2048))}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     *,
@@ -36,7 +53,9 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` (bench contract) for the local master
-    thread count and ``SPARK_MASTER`` for an explicit master URL.
+    thread count, ``SPARK_MASTER`` for an explicit master URL and
+    ``SPARK_DRIVER_MEMORY`` for the driver heap (default:
+    ``default_driver_memory()``).
 
     Note: ``getOrCreate`` returns an existing live session unchanged;
     configs only apply to the first creation in a process.
@@ -55,7 +74,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

@@ -20,7 +20,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from meteo_etl_spark.errors import LoadError
-from meteo_etl_spark.pipeline.control import read_fetch_metadata
+from meteo_etl_spark.pipeline.control import fetch_metadata_row
 from meteo_etl_spark.pipeline.warehouse import Warehouse
 from meteo_etl_spark.streaming.events import events_from_control, to_wire_json
 
@@ -41,10 +41,8 @@ def publish_finished_fetch(
     (events.to_avro_value — JVM or engine codec) and writes the bytes
     base64-per-line: the file topic's encoding of a binary Kafka
     message value (a real Kafka sink writes the bytes directly)."""
-    row = (
-        read_fetch_metadata(spark, warehouse)
-        .filter(F.col("id") == fetch_id)
-        .filter(F.col("finished_at").isNotNull())
+    row = fetch_metadata_row(spark, warehouse, fetch_id).filter(
+        F.col("finished_at").isNotNull()
     )
     ev = events_from_control(row)
     if wire_format == "avro":

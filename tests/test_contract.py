@@ -103,14 +103,8 @@ def test_bench_emits_contract_json(spark, monkeypatch, capsys):
     assert payload["n_queries"] == len(detail["queries"]) >= 10
     assert payload["n_errors"] == len(detail.get("errors", {})) == 0
     assert all(v >= 0 for v in detail["queries"].values())
-    # sidecar copy exists and agrees with the stdout detail line
-    import os
-
-    repo = os.path.dirname(os.path.abspath(bench.__file__))
-    with open(os.path.join(repo, payload["queries_path"])) as f:
-        sidecar = json.load(f)
-    assert sidecar["queries"] == detail["queries"]
-    assert sidecar["total"] == payload["value"]
+    # the headline points at the detail line; bench writes no file
+    assert payload["queries_path"] == "(stdout line above)"
 
 
 def test_publish_unfinished_fetch_raises(spark, warehouse):

@@ -161,26 +161,42 @@ def test_run_etl_many_partial_failure(spark, warehouse, monkeypatch):
 
 def test_etl_pipeline_on_atomic_warehouse(spark, tmp_path, offline_source):
     """The full 3-step ETL (control insert -> extract/normalize -> silver
-    merge -> control finalize) on Warehouse(atomic=True): every table
-    lands through the manifest layout, lifecycle and row contents match
-    the plain-layout run."""
+    merge -> control finalize) on Warehouse(atomic=True): silver lands
+    through the manifest layout, the control rows and the silver row
+    contents match the plain-layout run, and in both modes a torn
+    control write (a leftover temp file) stays invisible to readers."""
+    import os
+
+    import pyarrow.dataset as ds
+
     from meteo_etl_spark.operators.atomic import is_atomic_table
     from meteo_etl_spark.pipeline.control import read_fetch_metadata
     from meteo_etl_spark.pipeline.warehouse import Warehouse
 
-    results = {}
+    results, controls = {}, {}
     for mode, flag in (("plain", False), ("atomic", True)):
         wh = Warehouse(str(tmp_path / mode), atomic=flag)
         result = batch.run_etl(spark, wh, "meteo", {"latitude": 3.06, "longitude": 5.25})
         assert result.status == FETCH_STATUS_SUCCESS
         ctrl = read_fetch_metadata(spark, wh).collect()
         assert len(ctrl) == 1 and ctrl[0].status == FETCH_STATUS_SUCCESS
+        assert ctrl[0].id == result.fetch_id and ctrl[0].finished_at is not None
+        controls[mode] = {
+            k: v
+            for k, v in ctrl[0].asDict().items()
+            if k not in ("id", "created_at", "request_timestamp", "finished_at")
+        }
+        # crash between temp write and rename: the torn file is skipped
+        with open(os.path.join(wh.control_path, f".{result.fetch_id}.0badc0de.tmp"), "wb") as f:
+            f.write(b"PAR1")
+        assert [r.id for r in read_fetch_metadata(spark, wh).collect()] == [result.fetch_id]
+        assert ds.dataset(wh.control_path, format="parquet").count_rows() == 1
         obs = read_observations(spark, wh)
         results[mode] = {
             (r.latitude, r.longitude, r.timestamp, r.temperature)
             for r in obs.collect()
         }
         assert is_atomic_table(wh.observations_path) == flag
-        assert is_atomic_table(wh.control_path) == flag
+    assert controls["plain"] == controls["atomic"]
     assert results["plain"] == results["atomic"]
     assert len(results["atomic"]) == N_HOURS
