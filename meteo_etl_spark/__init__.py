@@ -18,9 +18,9 @@ Design stance (SURVEY.md §7):
 - **Structured Streaming** with ``foreachBatch`` merge for the
   streaming pipeline; ``availableNow`` triggers for bounded runs.
 - **Scale discipline**: broadcast small dimensions, pre-aggregate
-  before joins, partition-pruned merges (dynamic partition overwrite),
-  AQE on, Arrow-vectorized Pandas UDFs only where built-ins can't
-  express the semantics.
+  before joins, partition-pruned merges (staged, then swapped in
+  per partition), AQE on, Arrow-vectorized Pandas UDFs only where
+  built-ins can't express the semantics.
 """
 
 __version__ = "0.1.0"

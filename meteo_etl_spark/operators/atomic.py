@@ -2,12 +2,13 @@
 
 The reference's upsert is atomic because Postgres makes it so
 (`etl/load.py:35-57` runs INSERT..ON CONFLICT inside a transaction). The
-engine's parquet merge (`operators/upsert.merge_parquet`) rewrites
-partition directories in place via dynamic partition overwrite — fast
-and ecosystem-readable, but a job killed mid-overwrite can leave a
-half-rewritten partition. This module closes that gap the way every
-table format (Delta, Iceberg, Hudi) does, reduced to its essential
-mechanism:
+engine's plain parquet merge (`operators/upsert.merge_parquet`) stages
+its rewrite beside the table and swaps each partition directory in by
+two renames — fast and ecosystem-readable, but a job killed between
+swaps leaves some partitions rewritten and others not, and one killed
+between a swap's two renames leaves that partition missing. This module
+closes that gap the way every table format (Delta, Iceberg, Hudi) does,
+reduced to its essential mechanism:
 
 - **data is immutable**: each commit writes a fresh *generation*
   directory ``<path>/gen-<hex>/`` (a normal, optionally hive-partitioned

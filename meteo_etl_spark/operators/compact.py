@@ -6,8 +6,12 @@ listing and task scheduling start to dominate scan time). Compaction
 rewrites each touched partition into ~``target_file_bytes`` files,
 preserving rows exactly — the maintenance job a table format (Delta
 OPTIMIZE / Iceberg rewrite_data_files) runs; here it is explicit and
-uses the same staged dynamic-partition-overwrite machinery as the
-merge (operators/upsert.py), so readers never see a partial rewrite.
+lands through the same commit paths as the merge (operators/upsert.py).
+On a plain table the rewrite is staged beside the table and each
+partition dir is swapped in by two renames, so the staged files land
+as written, but a reader listing the table mid-landing can see some
+partitions compacted and others not; only an ``atomic=True`` table
+commits several partitions at once (one manifest flip).
 
 Partition selection: by default only partitions whose file count
 exceeds ``min_files_to_compact`` are rewritten — an incremental
@@ -49,7 +53,7 @@ BLOOM_NDV = 1_000_000
 def _bloom_write_conf(spark: SparkSession, cols: list[str], ndv: int):
     """Scope parquet bloom-filter writer properties to one rewrite.
 
-    The engine's commit paths (dynamic-partition staging, atomic
+    The engine's commit paths (plain staging dirs, atomic
     generations) write through the hadoop job conf, not a per-writer
     option chain — so the properties are set on the session's hadoop
     conf and unset afterward (single-driver engine; writes inside the

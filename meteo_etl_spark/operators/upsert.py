@@ -16,10 +16,11 @@ documented union+full-outer rewrite with **partition-pruned rewrites**:
 2. a merge only reads+rewrites the partitions the update batch touches
    (``left_semi`` against the distinct partition values, which Catalyst
    turns into partition pruning on the parquet scan);
-3. the rewrite lands via dynamic partition overwrite
-   (``spark.sql.sources.partitionOverwriteMode=dynamic``), staged
-   through a scratch directory because Spark refuses to overwrite a
-   path it is simultaneously reading.
+3. the rewrite is written to a staging directory beside the table
+   (Spark refuses to overwrite a path it is simultaneously reading),
+   then each staged partition directory replaces the table's one by
+   two renames, so the files land exactly as written
+   (``_rewrite_partitions``).
 
 At 100 TB this is the same I/O shape a Delta MERGE performs (read
 matched files, rewrite them); the win is that a day's upsert touches a
@@ -182,7 +183,7 @@ def merge_parquet(
             ).overwrite(inserts)
             n = read_table(spark, path).count()
             return MergeStats(inserted=n, updated=0, target_rows=n)
-        n = _write(inserts, path, partition_col, overwrite_dynamic=False)
+        n = _write(inserts, path, partition_col)
         return MergeStats(inserted=n, updated=0, target_rows=n)
 
     # mergeSchema: the target may span schema versions (old partitions
@@ -378,23 +379,53 @@ def _remove_plain_layout(path: str) -> None:
             os.unlink(full)
 
 
-def _write(df: DataFrame, path: str, partition_col: str | None, *, overwrite_dynamic: bool) -> int:
-    writer = df.write.mode("overwrite" if overwrite_dynamic else "append")
+def _write(df: DataFrame, path: str, partition_col: str | None) -> int:
+    writer = df.write.mode("append")
     if partition_col:
         writer = writer.partitionBy(partition_col)
     writer.parquet(path)
-    return df.sparkSession.read.parquet(path).count() if not overwrite_dynamic else -1
+    return df.sparkSession.read.parquet(path).count()
+
+
+def _rename_all(moves: list[tuple[str, str]]) -> None:
+    """Apply the renames in order. On a failure, undo the ones already
+    done (newest first) and re-raise, so a failed landing leaves the
+    table as it was instead of losing the data moved aside."""
+    done: list[tuple[str, str]] = []
+    try:
+        for src, dst in moves:
+            os.replace(src, dst)
+            done.append((src, dst))
+    except OSError:
+        for src, dst in reversed(done):
+            os.replace(dst, src)
+        raise
 
 
 def _rewrite_partitions(
     spark: SparkSession, merged: DataFrame, path: str, partition_col: str | None
 ) -> list[str]:
-    """Stage the merged rows, then land them with dynamic partition
-    overwrite (only the affected partitions are replaced). Returns the
-    staged partition dir names (``col=value``); an all-rows-empty
-    merge stages nothing and lands nothing (the caller handles
-    partitions a delete emptied — dynamic overwrite cannot remove a
-    partition absent from the written data)."""
+    """Stage the merged rows beside the table, then land the staged
+    files as written, by renames. Returns the staged partition dir
+    names (``col=value``); an all-rows-empty merge stages nothing and
+    lands nothing (the caller removes partitions a delete emptied —
+    only partitions present in the staged data are replaced).
+
+    Partitioned: each staged ``col=value`` dir replaces the table's dir
+    of that name by two renames (the old dir moves aside into the
+    staging dir, the staged one moves in); partitions the batch did not
+    touch keep their files. Unpartitioned: every entry of the table
+    moves aside, then the staged files move in. Moving the files,
+    rather than reading the staging dir back and writing it again
+    (which packs small files into scan splits), keeps the file count
+    and row-to-file layout the caller built: compaction's file sizing
+    and Z-order clustering, ``sort_within_partitions``. The replaced
+    data sits in the staging dir, outside the table, until the staging
+    dir is removed; a failed rename undoes the landing (``_rename_all``).
+    Each partition swap is its own commit: a reader
+    listing the table mid-landing can see some partitions old and some
+    new, or miss the one being swapped; ``atomic=True`` is the
+    multi-partition commit."""
     staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
     try:
         w = merged.write.mode("overwrite")
@@ -419,16 +450,24 @@ def _rewrite_partitions(
         if not has_files:
             return staged_parts
 
-        staged = spark.read.parquet(staging)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            w2 = staged.write.mode("overwrite")
-            if partition_col:
-                w2 = w2.partitionBy(partition_col)
-            w2.parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        aside = os.path.join(staging, "_replaced")
+        moves: list[tuple[str, str]] = []
+        if partition_col:
+            for d in staged_parts:
+                target = os.path.join(path, d)
+                if os.path.exists(target):
+                    moves.append((target, os.path.join(aside, d)))
+                moves.append((os.path.join(staging, d), target))
+        else:
+            moves = [
+                (os.path.join(path, e), os.path.join(aside, e))
+                for e in os.listdir(path)
+            ] + [
+                (os.path.join(staging, e), os.path.join(path, e))
+                for e in os.listdir(staging)
+            ]
+        os.mkdir(aside)
+        _rename_all(moves)
         # Spark's shared file-status cache may still list the replaced
         # files; invalidate so subsequent scans see the rewrite.
         spark.catalog.refreshByPath(path)

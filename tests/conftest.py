@@ -65,6 +65,51 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session", autouse=True)
+def oracle_prefetch(request):
+    """DuckDB oracle results of the selected tests that ask for
+    ``oracle_results`` (tests/test_queries.py), keyed by query name.
+    One background thread computes them in test order from the start
+    of the session, so DuckDB (which releases the GIL) runs while the
+    earlier Spark tests run, and a query test waits only for its own
+    result; an oracle error re-raises in that test. Same SQL, and the
+    connection is made as for a direct ``execute``. The thread and the
+    DuckDB threads it starts run at a lower priority, so they use the
+    cores Spark leaves idle; more than one oracle thread was slower."""
+    specs = [
+        item.callspec.params["spec"]
+        for item in request.session.items
+        if "oracle_results" in item.fixturenames and hasattr(item, "callspec")
+    ]
+    if not specs:
+        yield {}
+        return
+    import os
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tests.oracle import duckdb_connection
+
+    state = {}
+
+    def start():
+        if hasattr(os, "setpriority"):
+            # per thread on Linux; threads made later inherit it
+            os.setpriority(os.PRIO_PROCESS, threading.get_native_id(), 10)
+        state["con"] = duckdb_connection(SF_SMALL)
+
+    pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="oracle", initializer=start)
+    futures = {
+        s.name: pool.submit(lambda sql=s.oracle: state["con"].execute(sql).df())
+        for s in specs
+        if s.oracle is not None
+    }
+    yield futures
+    pool.shutdown(wait=True, cancel_futures=True)
+    if "con" in state:
+        state["con"].close()
+
+
 @pytest.fixture()
 def payload() -> dict:
     return golden_payload()

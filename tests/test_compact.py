@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from meteo_etl_spark.operators.compact import compact_table
@@ -85,6 +86,95 @@ def test_compact_honors_target_bytes_for_one_big_partition(spark, tmp_path):
     n_after = len(_parquet_files(path))
     assert 2 <= n_after < n_before
     assert spark.read.parquet(path).count() == 20000
+
+
+def test_compact_unpartitioned_honors_target_bytes(spark, tmp_path):
+    """An unpartitioned rewrite lands the file count it computed,
+    round(bytes / target_file_bytes) — the staged files are moved into
+    the table, not read back and rewritten one file per scan split."""
+    path = str(tmp_path / "t")
+    df = spark.range(0, 20000).withColumn("pad", F.repeat(F.lit("x"), 100))
+    for i in range(8):
+        df.filter((F.col("id") % 8) == i).write.mode("append").parquet(path)
+    n_before = len(_parquet_files(path))
+    bytes_total = sum(os.path.getsize(f) for f in _parquet_files(path))
+    target = bytes_total // 10
+
+    stats = compact_table(spark, path, target_file_bytes=target)
+
+    assert stats.files_before == n_before
+    assert stats.files_after == round(bytes_total / target)
+    assert len(_parquet_files(path)) == stats.files_after
+    assert spark.read.parquet(path).count() == 20000
+
+
+def _table_entries_are_layout(path, partition_col=None):
+    """Every entry of a plain table dir is a data file, a partition dir
+    or Spark's own bookkeeping (_SUCCESS marker, .crc checksums)."""
+    for e in os.listdir(path):
+        full = os.path.join(path, e)
+        if os.path.isdir(full):
+            assert partition_col and e.startswith(f"{partition_col}="), e
+        else:
+            assert e.endswith((".parquet", ".crc")) or e == "_SUCCESS", e
+
+
+def test_plain_landing_leaves_nothing_behind(spark, tmp_path):
+    """A plain merge and a plain compaction leave no staging dir beside
+    the table, no stray entry in it, and the files of a partition the
+    batch did not touch unchanged."""
+    from meteo_etl_spark.operators.upsert import merge_parquet
+
+    part = str(tmp_path / "part")
+    base = spark.createDataFrame(
+        [(k, float(k), "abc"[k % 3]) for k in range(30)], "k int, v double, p string"
+    )
+    base.write.partitionBy("p").parquet(part)
+    untouched = sorted(os.listdir(os.path.join(part, "p=b")))
+    upd = spark.createDataFrame(
+        [(0, -1.0, "a"), (3, -3.0, "a"), (99, 9.0, "a")], "k int, v double, p string"
+    )
+    stats = merge_parquet(spark, part, upd, ["k"], partition_col="p")
+    assert (stats.inserted, stats.updated, stats.target_rows) == (1, 2, 31)
+    assert sorted(os.listdir(os.path.join(part, "p=b"))) == untouched
+    _table_entries_are_layout(part, "p")
+
+    flat = str(tmp_path / "flat")
+    for i in range(5):
+        spark.range(i * 10, (i + 1) * 10).write.mode("append").parquet(flat)
+    compact_table(spark, flat)
+    assert spark.read.parquet(flat).count() == 50
+    _table_entries_are_layout(flat)
+
+    assert sorted(os.listdir(tmp_path)) == ["flat", "part"]
+
+
+def test_failed_plain_landing_restores_the_table(spark, tmp_path, monkeypatch):
+    """A rename that fails after the table's files moved aside undoes
+    the landing: the table keeps its old files and rows, and the
+    staging dir (which held them) is gone."""
+    path = str(tmp_path / "t")
+    for i in range(5):
+        spark.range(i * 10, (i + 1) * 10).write.mode("append").parquet(path)
+    before = sorted(os.listdir(path))
+    real_replace = os.replace
+    failed = []
+
+    def replace_failing_first_move_in(src, dst):
+        if "__staging_" in src and not failed:
+            failed.append(src)
+            raise OSError("injected rename failure")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_failing_first_move_in)
+    with pytest.raises(OSError, match="injected"):
+        compact_table(spark, path)
+    monkeypatch.undo()
+
+    assert failed
+    assert sorted(os.listdir(path)) == before
+    assert spark.read.parquet(path).count() == 50
+    assert os.listdir(tmp_path) == ["t"]
 
 
 def test_compact_atomic_table_consolidates_generations(spark, tmp_path):

@@ -21,7 +21,12 @@ def _row(spark, warehouse, fetch_id):
     return control.fetch_metadata_row(spark, warehouse, fetch_id).collect()[0]
 
 
-@pytest.mark.parametrize("fetch_id", [str(uuid.uuid4()), "not-a-uuid", "../../etc/passwd"])
+# a fixed well-formed id that no insert makes: a uuid4() here gave the
+# case a new name on every collection
+@pytest.mark.parametrize(
+    "fetch_id",
+    ["5034a450-97a2-4f4f-86b3-e591f0a8c0eb", "not-a-uuid", "../../etc/passwd"],
+)
 def test_update_of_unknown_id_raises(spark, warehouse, fetch_id):
     control.insert_fetch_metadata(spark, warehouse, URL)
     with pytest.raises(LoadError, match="no fetch_metadata row"):
