@@ -37,17 +37,6 @@ def main(argv: list[str] | None = None) -> None:
         "registered non-roster names are accepted — side-effecting ones "
         "time scratch I/O, a warning says so; unregistered names fail)",
     )
-    ap.add_argument(
-        "--serve",
-        action="store_true",
-        help="force the persisted ANN serve-path section even under "
-        "--names (it runs by default on full-roster runs)",
-    )
-    ap.add_argument(
-        "--no-serve",
-        action="store_true",
-        help="skip the persisted ANN serve-path section",
-    )
     cli = ap.parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # scale factor from the dir name (sf0.1 -> 0.1); fall back to 0.1
@@ -95,7 +84,6 @@ def main(argv: list[str] | None = None) -> None:
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    serve_recall: dict[str, float] = {}
     for name, spec in bench_specs.items():
         best = float("inf")
         try:
@@ -111,81 +99,6 @@ def main(argv: list[str] | None = None) -> None:
             timings[name] = round(best, 4)
         except Exception as exc:  # one broken query must not null the round
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    # Persisted ANN serving twins (r12 verdict order #4): the engine's
-    # hottest real-user read path. The sim_ann_serve_* registry queries
-    # are excluded from the roster as side-effecting (each run builds a
-    # scratch index), so here each index is built ONCE outside the
-    # timed region and only the partition-pruned query path is timed,
-    # same 2-run-min discipline as the roster. This keeps serve-path
-    # latency under the 3-run certified tracking instead of living only
-    # in R12_NEWOPS evidence tables.
-    if (cli.serve or not cli.names) and not cli.no_serve:
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from meteo_etl_spark.functions import similarity as sim
-        from meteo_etl_spark.sources.testdata import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        qv = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == 0).collect()[0].embedding
-        ]
-        scratch = tempfile.mkdtemp(prefix="bench_serve_")
-        serve_specs = {
-            "serve_lsh_tuned": (
-                lambda p: sim.build_ann_index("lsh_tuned", emb, p),
-                lambda p: sim.query_ann_index(
-                    "lsh_tuned", spark, p, qv, k=5, exclude_id=0
-                ),
-            ),
-            "serve_ivf": (
-                lambda p: sim.build_ivf_index(emb, p),
-                lambda p: sim.query_ivf_index(spark, p, qv, k=5, exclude_id=0),
-            ),
-            "serve_ivfpq": (
-                lambda p: sim.build_ivfpq_index(emb, p),
-                lambda p: sim.query_ivfpq_index(
-                    spark, p, qv, emb, k=5, n_cand=100, exclude_id=0
-                ),
-            ),
-            "serve_ivfsq8": (
-                lambda p: sim.build_ivfsq8_index(emb, p),
-                lambda p: sim.query_ivfsq8_index(
-                    spark, p, qv, emb, k=5, n_cand=100, exclude_id=0
-                ),
-            ),
-        }
-        # exact ground truth for the served recall@5 column (r13
-        # verdict order #5): a future index change that trades recall
-        # for wall time must be visible in the SAME certified artifact
-        exact5 = {
-            r.vec_id
-            for r in sim.brute_force_topk(emb, query_id=0, k=5).collect()
-        }
-        try:
-            for name, (build, query) in serve_specs.items():
-                p = os.path.join(scratch, name)
-                try:
-                    build(p)  # untimed: one-time index construction
-                    best = float("inf")
-                    rows = []
-                    for _ in range(2):
-                        spark.catalog.clearCache()
-                        t0 = time.perf_counter()
-                        rows = query(p).collect()
-                        best = min(best, time.perf_counter() - t0)
-                    timings[name] = round(best, 4)
-                    serve_recall[name] = round(
-                        len({r.vec_id for r in rows} & exact5) / 5.0, 4
-                    )
-                except Exception as exc:
-                    errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
 
     total = round(sum(timings.values()), 4)
     # The driver tail-captures only the LAST 2000 chars of stdout, so
@@ -206,8 +119,6 @@ def main(argv: list[str] | None = None) -> None:
     except (OSError, ValueError):
         pass
     detail: dict = {"queries": timings}
-    if serve_recall:
-        detail["serve_recall"] = serve_recall
     if errors:
         detail["errors"] = errors
     print(json.dumps(detail))
